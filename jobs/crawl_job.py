@@ -36,11 +36,6 @@ def main() -> None:
     parser.add_argument("--fast-politeness", action="store_true")
     parser.add_argument("--checkpoint-interval", type=int, default=1)
     parser.add_argument(
-        "--seen-check", choices=("cogroup", "join"), default="cogroup",
-        help="exact seen-set mode: fused cogroup gate (default) or the "
-        "two-phase bloom-prefilter + JVM anti-join shape",
-    )
-    parser.add_argument(
         "--filter-kind", choices=("bloom", "cuckoo"), default="bloom",
     )
     parser.add_argument(
@@ -75,7 +70,6 @@ def main() -> None:
     run = CrawlRun(
         spark, catalog, pages, robots, num_shards=args.shards,
         checkpoint_interval=args.checkpoint_interval,
-        seen_check=args.seen_check,
         filter_kind=args.filter_kind,
         reliable_checkpoints=args.reliable_checkpoints,
     )

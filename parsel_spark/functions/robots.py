@@ -133,10 +133,10 @@ def robots_pattern_matches(pattern: str, path: str) -> bool:
     metacharacters: ``*`` matches any run of characters and a TRAILING
     ``$`` anchors the pattern to the end of the path (elsewhere ``$``
     is literal); without the anchor the pattern is a prefix match.
-    Pure-python twin of :func:`robots_pattern_like` — the udf/cogroup
-    crawl modes and the single-process oracle all call this, the
-    relational mode runs the LIKE translation; a parity test pins the
-    two on every metachar shape."""
+    Pure-python twin of :func:`robots_pattern_like` — the crawl's gate
+    cogroup and the single-process oracle call this, ``robots_filter``
+    runs the LIKE translation; a parity test pins the two on every
+    metachar shape."""
     # hot-path fast exit: real-world rules are overwhelmingly plain
     # prefixes — the crawl loop calls this per candidate URL, so the
     # metachar-free case must stay a startswith, not a regex build
@@ -157,7 +157,7 @@ def robots_pattern_like(path: Column, pattern: Column) -> Column:
     column algebra — ``%``/``_`` escaped, ``*`` → ``%``, trailing
     ``$`` stripped and the implicit trailing ``%`` suppressed.  LIKE's
     greedy ``%`` backtracking is equivalent to the regex ``.*`` the
-    python twin uses, so the two modes agree on every input; both
+    python twin uses, so the two twins agree on every input; both
     engines (Spark and DuckDB) evaluate the same expression."""
     anchored = pattern.endswith("$")
     core = F.when(

@@ -21,8 +21,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -224,12 +222,6 @@ def _minhash_mix(h, k):
     return lane1 * F.lit(1 << 31) + lane2
 
 
-def _md5_hash60_py(value: str) -> int:
-    """Python twin of ``md5_hash60``: first 60 bits of md5 (== first 15
-    hex chars) — first 8 digest bytes big-endian, low nibble dropped."""
-    return int.from_bytes(hashlib.md5(value.encode("utf-8")).digest()[:8], "big") >> 4
-
-
 def _mix_constants(num_hashes: int):
     k = np.arange(num_hashes, dtype=np.int64)
     return (
@@ -240,38 +232,6 @@ def _mix_constants(num_hashes: int):
     )
 
 
-def minhash_sig_udf(num_hashes: int = 32):
-    """Arrow-batched signature computation producing EXACTLY the values
-    of the ``_minhash_mix``/``md5_hash60`` expressions (cross-checked in
-    tests): md5 runs in C (hashlib) and the per-k mixing is one numpy
-    (n_shingles × num_hashes) broadcast — ~2.5× faster than evaluating
-    the equivalent nested higher-order expressions, whose per-element
-    lambda interpretation dominates at this arithmetic density.  Still
-    map-side and linear; the DuckDB oracle replays the same math."""
-    a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
-
-    @F.pandas_udf("array<long>")
-    def _sig(shingle_lists: pd.Series) -> pd.Series:
-        out = []
-        for shingles in shingle_lists:
-            if shingles is None:
-                out.append(None)
-                continue
-            h = np.fromiter(
-                (_md5_hash60_py(s) for s in shingles),
-                dtype=np.int64,
-                count=len(shingles),
-            )
-            h1 = (h >> 30)[:, None]
-            h2 = (h & _LANE_MASK)[:, None]
-            lane1 = (a_k[None, :] * h1 + b_k[None, :]) % MERSENNE_P
-            lane2 = (c_k[None, :] * h2 + d_k[None, :]) % MERSENNE_P
-            out.append((lane1 * (1 << 31) + lane2).min(axis=0))
-        return pd.Series(out)
-
-    return _sig
-
-
 def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     """Signature from PRE-HASHED shingles (``array<long>`` of
     ``md5_hash60`` values): only 8-byte ints cross the JVM↔Python
@@ -279,9 +239,10 @@ def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     conversion of a STRING-list column materializes a Python string
     object per shingle, which dominated the old path's stage time
     (guide §4.1: control what crosses the boundary).  The per-k mixing
-    is the same numpy broadcast as ``minhash_sig_udf``; values are
-    bit-identical (pinned in tests) because ``md5_hash60`` (JVM
-    expression) == ``_md5_hash60_py``."""
+    is one numpy (n_shingles × num_hashes) broadcast; values are
+    bit-identical to the ``_minhash_mix`` expressions
+    (``minhash_signatures_expr``, pinned in tests), which the DuckDB
+    oracle replays."""
     a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
 
     @F.pandas_udf("array<long>")
@@ -497,7 +458,8 @@ def simhash_expr(text_col: str = "text", seg: int = 0):
     (with multiplicity) votes ±1 per bit, bit b of the result is 1 iff
     the vote sum is ≥ 0.  ``seg=0`` is the classic 60-bit simhash
     (``md5_hash60`` word hashes); ``seg=1`` is the second independent
-    60-bit lane of the 120-bit fingerprint (``simhash120_col``).
+    60-bit lane of the 120-bit fingerprint
+    (``simhash120_from_hashes_col``).
 
     Entirely JVM-side (no Python in the hot path) AND reproducible by
     an independent SQL engine — the DuckDB oracle computes the same
@@ -527,34 +489,6 @@ def simhash_expr(text_col: str = "text", seg: int = 0):
         )
         """
     )
-
-
-def _simhash60_batch(texts: pd.Series) -> pd.Series:
-    """Arrow-batched twin of ``simhash_expr`` — identical values
-    (cross-checked in tests): same ``' +'``-regex split of the
-    space-trimmed lowercased text (duplicates kept), same md5-low-60-bit
-    word hash, same ±1 bit votes; md5 in C, votes as one numpy
-    broadcast per document."""
-    import re as _re
-
-    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-    out: list[int | None] = []
-    for text in texts:
-        if text is None:
-            out.append(None)  # expr yields NULL for NULL text
-            continue
-        words = _re.split(" +", text.lower().strip(" "))
-        hashes = np.fromiter(
-            (_md5_hash60_py(w) for w in words), dtype=np.int64, count=len(words)
-        )
-        bits = (hashes[:, None] >> shifts[None, :]) & 1
-        votes = (2 * bits - 1).sum(axis=0)
-        out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return pd.Series(out, dtype="object")
-
-
-def simhash_col(text_col: str = "text"):
-    return F.pandas_udf(_simhash60_batch, "long")(F.col(text_col))
 
 
 def _word_md5_segments(text_col: str, segments: int = 1):
@@ -597,9 +531,9 @@ def _simhash_votes(seg_arrays: "list") -> "list[int | None]":
 
 def simhash_from_hashes_col(text_col: str = "text"):
     """60-bit simhash with JVM-side word hashing + numpy votes —
-    bit-identical to ``simhash_expr``/``simhash_col`` (pinned in
-    tests); the md5 of every word runs codegen'd in the JVM and only
-    ``array<long>`` crosses to Python."""
+    bit-identical to ``simhash_expr`` (pinned in tests); the md5 of
+    every word runs codegen'd in the JVM and only ``array<long>``
+    crosses to Python."""
     (seg1,) = _word_md5_segments(text_col, 1)
 
     @F.pandas_udf("long")
@@ -610,9 +544,12 @@ def simhash_from_hashes_col(text_col: str = "text"):
 
 
 def simhash120_from_hashes_col(text_col: str = "text"):
-    """120-bit twin of :func:`simhash_from_hashes_col` — two 60-bit
-    lanes from one JVM md5 pass; values bit-identical to
-    ``simhash120_col`` / ``simhash_expr(seg=0/1)``."""
+    """``STRUCT<sh1: BIGINT, sh2: BIGINT>`` — the 120-bit fingerprint
+    as two 60-bit md5-segment lanes from one JVM md5 pass; values
+    bit-identical to ``simhash_expr(seg=0/1)``.  The scale path: at
+    billions of docs, 120 bits keeps the hamming-LSH bands ≥ ~17 bits
+    wide at k=6 instead of ~8, so band-bucket cardinality stays ~2^17
+    and the candidate join cannot degenerate toward all-pairs."""
     seg1, seg2 = _word_md5_segments(text_col, 2)
 
     @F.pandas_udf("sh1 long, sh2 long")
@@ -622,53 +559,6 @@ def simhash120_from_hashes_col(text_col: str = "text"):
         )
 
     return _vote(seg1, seg2)
-
-
-def _simhash120_batch(texts: pd.Series) -> pd.DataFrame:
-    """Arrow-batched 120-bit simhash: TWO independent 60-bit vote lanes
-    from one md5 per word — lane 1 over md5 hex chars 1–15 (identical
-    to ``_simhash60_batch``), lane 2 over chars 16–30.  Values are
-    bit-identical to ``simhash_expr(seg=0/1)`` (cross-checked in
-    tests); one C md5 + one numpy broadcast per document computes both
-    lanes."""
-    import re as _re
-
-    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-    mask60 = (1 << 60) - 1
-    sh1_out: list[int | None] = []
-    sh2_out: list[int | None] = []
-    for text in texts:
-        if text is None:
-            sh1_out.append(None)
-            sh2_out.append(None)
-            continue
-        words = _re.split(" +", text.lower().strip(" "))
-        digests = [hashlib.md5(w.encode("utf-8")).digest() for w in words]
-        seg1 = np.fromiter(
-            (int.from_bytes(d[:8], "big") >> 4 for d in digests),
-            dtype=np.int64,
-            count=len(digests),
-        )
-        # hex chars 16-30 == nibbles 15-29 of the big-endian digest
-        seg2 = np.fromiter(
-            ((int.from_bytes(d, "big") >> 8) & mask60 for d in digests),
-            dtype=np.int64,
-            count=len(digests),
-        )
-        for seg, out in ((seg1, sh1_out), (seg2, sh2_out)):
-            bits = (seg[:, None] >> shifts[None, :]) & 1
-            votes = (2 * bits - 1).sum(axis=0)
-            out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return pd.DataFrame({"sh1": sh1_out, "sh2": sh2_out})
-
-
-def simhash120_col(text_col: str = "text"):
-    """``STRUCT<sh1: BIGINT, sh2: BIGINT>`` — the 120-bit fingerprint
-    as two 60-bit md5-segment lanes (the scale path: at billions of
-    docs, 120 bits keeps the hamming-LSH bands ≥ ~17 bits wide at k=6
-    instead of ~8, so band-bucket cardinality stays ~2^17 and the
-    candidate join cannot degenerate toward all-pairs)."""
-    return F.pandas_udf(_simhash120_batch, "sh1 long, sh2 long")(F.col(text_col))
 
 
 def simhash_band_widths(max_hamming: int, bits: int = SIMHASH_BITS) -> list[int]:
@@ -710,8 +600,8 @@ def simhash_pairs(
     k=6).
 
     ``bits`` picks the fingerprint width: 120 (DEFAULT — two md5
-    segments, ``simhash120_col``) keeps bands ≥ ~17 bits wide at k=6,
-    i.e. ~2^17 distinct band values, so candidate-bucket sizes stay
+    segments, ``simhash120_from_hashes_col``) keeps bands ≥ ~17 bits
+    wide at k=6, i.e. ~2^17 distinct band values, so candidate-bucket sizes stay
     ~N/2^17 at billions of docs; the classic 60-bit fingerprint at k=6
     leaves ~8-bit bands (≤512 buckets — degenerates toward all-pairs
     at scale) and is kept for parity/compat."""

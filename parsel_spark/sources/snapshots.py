@@ -42,11 +42,14 @@ class SnapshotCatalog:
         self.data_dir = os.path.join(root, "data")
         os.makedirs(self.metadata_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
-        # schemas of tables THIS catalog object has written: read_table
-        # can then skip parquet schema inference (a 1-task Spark job per
-        # read-back — ~6 such jobs per crawl commit cycle).  Driver-side
-        # metadata only; a fresh process falls back to inference.
-        self._schemas: dict[str, Any] = {}
+        # schemas of tables THIS catalog object has written, keyed by
+        # name → (snapshot_id, schema) of its latest commit: read_table
+        # of that snapshot can then skip parquet schema inference (a
+        # 1-task Spark job per read-back — ~6 such jobs per crawl commit
+        # cycle).  Any other snapshot (an older one, or one committed by
+        # another process) falls back to inference, so a later
+        # schema-changing commit never leaks into an older read.
+        self._schemas: dict[str, tuple[int, Any]] = {}
 
     # -- commit ----------------------------------------------------------
     def commit(
@@ -97,10 +100,8 @@ class SnapshotCatalog:
 
         with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
             list(pool.map(write, jobs))
-        for name, df in tables.items():
-            self._schemas[name] = df.schema
-        for name, delta in (appends or {}).items():
-            self._schemas[name] = delta.schema
+        for name, df in {**tables, **(appends or {})}.items():
+            self._schemas[name] = (snapshot_id, df.schema)
         if callable(lineage):
             lineage = lineage()
         snapshot = Snapshot(
@@ -150,12 +151,13 @@ class SnapshotCatalog:
         entry = snapshot.tables[name]
         paths = entry if isinstance(entry, list) else [entry]
         reader = spark.read
-        schema = self._schemas.get(name)
-        if schema is not None:
-            # schema known from this object's own commit: skip parquet
-            # footer inference (and its 1-task Spark job).  Every delta
-            # of a table is written with the same schema by construction.
-            reader = reader.schema(schema)
+        memo = self._schemas.get(name)
+        if memo is not None and memo[0] == snapshot.snapshot_id:
+            # schema known from this object's commit of THIS snapshot:
+            # skip parquet footer inference (and its 1-task Spark job).
+            # Every delta of a table is written with the same schema by
+            # construction.
+            reader = reader.schema(memo[1])
         return reader.parquet(*paths)
 
     def history(self) -> list[Snapshot]:

@@ -12,6 +12,7 @@ from parsel_spark.plans.oracle import OracleCrawler
 from parsel_spark.sources.snapshots import SnapshotCatalog
 from parsel_spark.sources.synth import (
     SynthConfig,
+    robots_rows,
     seed_rows,
     synth_pages,
     synth_robots,
@@ -122,39 +123,110 @@ def test_resume_bit_identical(spark, corpus, oracle_result, tmp_path) -> None:
     )
 
 
-def test_robots_mode_and_partitioning_equivalence(
+class _TornWriter:
+    """File handle whose first write lands half its bytes, then fails —
+    a crash in the middle of a metadata write."""
+
+    def __init__(self, fh) -> None:
+        self._fh = fh
+
+    def write(self, data):
+        self._fh.write(data[: len(data) // 2])
+        self._fh.close()
+        raise OSError("injected metadata write failure")
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._fh.close()
+
+
+def test_initialize_metadata_write_failure_never_tears_snapshot(
+    spark, corpus, tmp_path, monkeypatch
+) -> None:
+    """A failure injected into EACH metadata write that ``initialize``
+    makes leaves the catalog either empty or at a complete snapshot:
+    ``load_snapshot()`` returns None or a valid snapshot, never a torn
+    ``v####.json`` a resume would choke on."""
+    import builtins
+    import os
+
+    pages, robots, seeds = corpus
+    real_open = builtins.open
+
+    def initialize_with(root: str, fail_at: int | None) -> list[str]:
+        meta_dir = os.path.join(root, "metadata")
+        writes: list[str] = []
+
+        def open_hook(file, mode="r", *args, **kwargs):
+            fh = real_open(file, mode, *args, **kwargs)
+            if "w" in mode and str(file).startswith(meta_dir):
+                writes.append(str(file))
+                if len(writes) == fail_at:
+                    return _TornWriter(fh)
+            return fh
+
+        run = CrawlRun(
+            spark, SnapshotCatalog(root), pages, robots, num_shards=SHARDS
+        )
+        with monkeypatch.context() as patch:
+            patch.setattr(builtins, "open", open_hook)
+            if fail_at is None:
+                run.initialize(seeds)
+            else:
+                with pytest.raises(OSError, match="injected"):
+                    run.initialize(seeds)
+        return writes
+
+    clean_root = str(tmp_path / "clean")
+    n_writes = len(initialize_with(clean_root, None))
+    assert n_writes >= 1
+    complete = SnapshotCatalog(clean_root).load_snapshot()
+    assert complete.wave == 0
+    assert complete.metrics == {
+        "dequeued": 0,
+        "new_urls": N_SEEDS,
+        "fetched": 0,
+        "frontier_rows": N_SEEDS,
+        "urls_emitted": N_SEEDS,
+        "urls_dequeued": 0,
+    }
+
+    for fail_at in range(1, n_writes + 1):
+        root = str(tmp_path / f"fail-{fail_at}")
+        initialize_with(root, fail_at)
+        snapshot = SnapshotCatalog(root).load_snapshot()
+        assert snapshot is None or (
+            snapshot.wave, snapshot.lineage, snapshot.metrics
+        ) == (complete.wave, complete.lineage, complete.metrics), fail_at
+
+
+def test_odd_partitioning_exact_parity(
     spark, corpus, oracle_result, tmp_path
 ) -> None:
-    """Physical choices are never semantic ones: the per-wave JVM
-    broadcast-join robots path (robots_mode='join') and an arbitrary
-    frontier_partitions count must both produce the exact oracle crawl
-    order / seen set / metrics / bloom lineage that the default
-    (python-broadcast robots inside the cogroup, parallelism-sized
-    partitioning) produces."""
+    """Partitioning is never a semantic choice: an arbitrary
+    frontier_partitions count must produce the exact oracle crawl order
+    / seen set / metrics / bloom lineage."""
     pages, robots, seeds = corpus
     oracle, oracle_metrics = oracle_result
 
-    for name, kwargs in (
-        ("jvm-robots", {"robots_mode": "join"}),
-        ("odd-partitions", {"frontier_partitions": 3}),
-    ):
-        catalog = SnapshotCatalog(str(tmp_path / name))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, **kwargs,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
+    catalog = SnapshotCatalog(str(tmp_path / "odd-partitions"))
+    run = CrawlRun(
+        spark, catalog, pages, robots, num_shards=SHARDS,
+        checkpoint_interval=2, frontier_partitions=3,
+    )
+    run.initialize(seeds)
+    metrics = run.run(WAVES)
 
-        assert metrics == oracle_metrics, name
-        assert run.crawl_order() == oracle.crawl_order(), name
-        assert run.seen_set() == oracle.seen_set(), name
-        snapshot = catalog.load_snapshot()
-        engine_hashes = {
-            row["partition_id"]: row["bloom_shard_hash"]
-            for row in snapshot.lineage
-        }
-        assert engine_hashes == oracle.bloom_shard_hashes(), name
+    assert metrics == oracle_metrics
+    assert run.crawl_order() == oracle.crawl_order()
+    assert run.seen_set() == oracle.seen_set()
+    snapshot = catalog.load_snapshot()
+    engine_hashes = {
+        row["partition_id"]: row["bloom_shard_hash"] for row in snapshot.lineage
+    }
+    assert engine_hashes == oracle.bloom_shard_hashes()
 
 
 def test_reliable_checkpoint_equivalence(
@@ -224,14 +296,20 @@ def test_politeness_split_deep_host_keeps_pruned_rows(spark) -> None:
 def test_skew_prune_deep_frontier_exact_parity(spark, tmp_path) -> None:
     """End-to-end guard for the salt-prune branch: a 2-host corpus whose
     per-host frontier depth exceeds 16×MAX_FETCH_CAP (asserted via the
-    oracle's own frontier) must still match the oracle's crawl order /
-    seen set exactly with ``skew_prune=True``."""
+    oracle's own frontier) and whose seed rows per host exceed the
+    automatic SKEW_PRUNE_RATIO (so the salted window runs) must still
+    match the oracle's crawl order / seen set exactly."""
     from parsel_spark.operators import frontier as fr
+    from parsel_spark.plans.crawl import SKEW_PRUNE_RATIO
 
     deep_cfg = SynthConfig(
         n_pages=600, n_hosts=2, out_degree=8, seed=7, with_images=False
     )
     n_seeds, waves = 200, 3
+    # the crawl's host count is the robots table's row count
+    assert n_seeds / len(robots_rows(deep_cfg)) > SKEW_PRUNE_RATIO, (
+        "corpus below the auto skew-prune ratio — salted branch not run"
+    )
     oracle = OracleCrawler(deep_cfg, num_shards=SHARDS)
     oracle.initialize(seed_rows(deep_cfg, n_seeds=n_seeds))
     depth_hit = False
@@ -252,88 +330,13 @@ def test_skew_prune_deep_frontier_exact_parity(spark, tmp_path) -> None:
     seeds = synth_seeds(spark, deep_cfg, n_seeds=n_seeds)
     run = CrawlRun(
         spark, SnapshotCatalog(str(tmp_path / "deep")), pages, robots,
-        num_shards=SHARDS, skew_prune=True,
+        num_shards=SHARDS,
     )
     run.initialize(seeds)
     metrics = run.run(waves)
     assert metrics == oracle_metrics
     assert run.crawl_order() == oracle.crawl_order()
     assert run.seen_set() == oracle.seen_set()
-
-
-def test_skew_prune_equivalence(spark, corpus, oracle_result, tmp_path) -> None:
-    """Forced salted pre-pruning and forced single-window dequeue must
-    produce identical crawl order / seen set / metrics — the salt pass
-    is a physical skew guard, never a semantic choice."""
-    pages, robots, seeds = corpus
-    oracle, oracle_metrics = oracle_result
-
-    for mode, name in ((True, "salted"), (False, "plain")):
-        catalog = SnapshotCatalog(str(tmp_path / name))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, skew_prune=mode,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
-        assert metrics == oracle_metrics, name
-        assert run.crawl_order() == oracle.crawl_order(), name
-        assert run.seen_set() == oracle.seen_set(), name
-
-
-def test_seen_check_mode_equivalence(spark, corpus, oracle_result, tmp_path) -> None:
-    """The fused cogroup seen-gate (default) and the two-phase
-    bloom_prefilter → JVM anti-join shape are physical choices, never
-    semantic ones: identical crawl order / seen set / metrics / bloom
-    lineage, including across micro-batched commits (pending deltas ride
-    different sides of the plan in the two modes)."""
-    pages, robots, seeds = corpus
-    oracle, oracle_metrics = oracle_result
-
-    for mode in ("cogroup", "join"):
-        catalog = SnapshotCatalog(str(tmp_path / f"seen-{mode}"))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, seen_check=mode,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
-        assert metrics == oracle_metrics, mode
-        assert run.crawl_order() == oracle.crawl_order(), mode
-        assert run.seen_set() == oracle.seen_set(), mode
-        snapshot = catalog.load_snapshot()
-        engine_hashes = {
-            row["partition_id"]: row["bloom_shard_hash"]
-            for row in snapshot.lineage
-        }
-        assert engine_hashes == oracle.bloom_shard_hashes(), mode
-
-
-def test_resume_across_seen_check_modes(spark, corpus, oracle_result, tmp_path) -> None:
-    """Snapshots are mode-agnostic: a crawl started under the fused
-    cogroup gate and RESUMED under the two-phase join gate (and vice
-    versa) must still match the oracle exactly — the seen/bloom tables
-    carry no mode-specific state."""
-    pages, robots, seeds = corpus
-    oracle, _ = oracle_result
-
-    for first_mode, second_mode in (("cogroup", "join"), ("join", "cogroup")):
-        name = f"xmode-{first_mode}-{second_mode}"
-        catalog_path = str(tmp_path / name)
-        first = CrawlRun(
-            spark, SnapshotCatalog(catalog_path), pages, robots,
-            num_shards=SHARDS, seen_check=first_mode,
-        )
-        first.initialize(seeds)
-        first.run(2)
-        del first
-        resumed = CrawlRun(
-            spark, SnapshotCatalog(catalog_path), pages, robots,
-            num_shards=SHARDS, seen_check=second_mode,
-        )
-        resumed.run(WAVES - 2)
-        assert resumed.crawl_order() == oracle.crawl_order(), name
-        assert resumed.seen_set() == oracle.seen_set(), name
 
 
 def test_respect_nofollow_prunes_discovery(spark, tmp_path) -> None:

@@ -154,33 +154,6 @@ class TestDedupSpark:
         assert min(widths_120) >= 12
         assert min(simhash_band_widths(6, bits=60)) < 12  # why 120 exists
 
-    def test_simhash120_udf_equals_expressions(self, spark) -> None:
-        """The Arrow 120-bit twin must be BIT-IDENTICAL per lane to the
-        SQL-expressible definitions the DuckDB oracle replays."""
-        from pyspark.sql import functions as F
-
-        from parsel_spark.operators.dedup import simhash120_col, simhash_expr
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        extra = spark.createDataFrame(
-            [(9001, ""), (9002, "  padded  words  "), (9003, "ONE")],
-            "doc_id long, text string",
-        )
-        both = (
-            docs.select("doc_id", "text")
-            .unionByName(extra)
-            .select(
-                "doc_id",
-                simhash120_col().alias("udf"),
-                simhash_expr().alias("e1"),
-                simhash_expr(seg=1).alias("e2"),
-            )
-        )
-        bad = both.filter(
-            (F.col("udf.sh1") != F.col("e1")) | (F.col("udf.sh2") != F.col("e2"))
-        ).count()
-        assert bad == 0
-
     def test_jaccard_lsh_mode_finds_planted_near_dups(self, spark) -> None:
         """block_col=None routes candidates through MinHash banding (the
         100 TB path — no quadratic-within-block self-join) and must
@@ -303,25 +276,6 @@ class TestDedupSpark:
         for i in range(5):
             assert (i, i + 10000) in pairs
             assert pairs[(i, i + 10000)] == 1.0
-
-    def test_simhash_udf_equals_expression(self, spark) -> None:
-        """The Arrow/numpy simhash twin must be BIT-IDENTICAL to the
-        SQL-expressible definition (which the DuckDB oracle replays)."""
-        from pyspark.sql import functions as F
-
-        from parsel_spark.operators.dedup import simhash_col, simhash_expr
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        extra = spark.createDataFrame(
-            [(9001, ""), (9002, "  padded  words  "), (9003, "ONE")],
-            "doc_id long, text string",
-        )
-        both = docs.select("doc_id", "text").unionByName(extra).select(
-            "doc_id",
-            simhash_col().alias("udf"),
-            simhash_expr().alias("expr"),
-        )
-        assert both.filter(F.col("udf") != F.col("expr")).count() == 0
 
     def test_minhash_udf_equals_expression(self, spark) -> None:
         from pyspark.sql import functions as F

@@ -14,7 +14,14 @@ def docs(spark):
     rows = [
         (i, f"alpha beta gamma delta {i} epsilon zeta eta theta iota kappa")
         for i in range(40)
-    ] + [(100, ""), (101, "one"), (102, "x " * 500)]
+    ] + [
+        (100, ""),
+        (101, "one"),
+        (102, "x " * 500),
+        # tokenizer edges: runs of spaces + padding, and case folding
+        (103, "  padded  words  "),
+        (104, "ONE"),
+    ]
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
@@ -424,7 +431,7 @@ class TestLshBucketSingleParse:
     """``lsh_bucket`` built from one F.expr parse must equal the legacy
     DSL construction (array-of-lits + interpreted fold per plane)
     bit-for-bit — across exact-width, short, long, empty and NULL
-    vectors (the fallback branch) and for qualified column refs."""
+    vectors; it takes a column name only."""
 
     def _legacy(self, embedding, planes):
         from parsel_spark.operators.similarity import dot
@@ -463,16 +470,11 @@ class TestLshBucketSingleParse:
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
-    def test_column_input_uses_same_values(self, spark):
+    def test_column_input_rejected(self, spark):
         from parsel_spark.operators.similarity import hyperplanes, lsh_bucket
 
-        planes = hyperplanes(4, 3, seed=5)
-        df = spark.createDataFrame(
-            [(1, [0.1, -0.2, 0.3, -0.4])], "vec_id long, embedding array<float>"
-        )
-        a = df.select(lsh_bucket("embedding", planes).alias("b")).collect()
-        b = df.select(lsh_bucket(F.col("embedding"), planes).alias("b")).collect()
-        assert a == b
+        with pytest.raises(TypeError, match="column name"):
+            lsh_bucket(F.col("embedding"), hyperplanes(4, 3, seed=5))
 
 
 class TestCatalogSchemaMemo:
@@ -502,6 +504,26 @@ class TestCatalogSchemaMemo:
         assert sorted(map(tuple, warm_d.collect())) == sorted(
             map(tuple, cold_d.collect())
         )
+
+
+    def test_older_snapshot_keeps_its_own_schema(self, spark, tmp_path):
+        """The memo belongs to the snapshot it was written with: after a
+        schema-changing commit, reading the OLDER snapshot through the
+        same catalog object returns the older schema, not the newest."""
+        from parsel_spark.sources.snapshots import SnapshotCatalog
+
+        cat = SnapshotCatalog(str(tmp_path / "cat"))
+        old = spark.createDataFrame([(1, "a")], "id long, s string")
+        first = cat.commit(wave=0, tables={"t": old})
+        new = spark.createDataFrame(
+            [(2, "b", 0.5)], "id long, s string, x double"
+        )
+        cat.commit(wave=1, tables={"t": new})
+
+        reread = cat.read_table(spark, "t", snapshot_id=first.snapshot_id)
+        assert reread.schema == old.schema
+        assert [tuple(r) for r in reread.collect()] == [(1, "a")]
+        assert cat.read_table(spark, "t").schema == new.schema
 
 
 class TestLineageCallable:

@@ -180,9 +180,10 @@ def test_allow_overrides_broader_disallow(spark) -> None:
 
 def test_pathless_url_defaults_to_root_in_both_modes(spark) -> None:
     """'http://host' (no path) must evaluate as path '/' in the JVM
-    join mode, the python udf mode AND the oracle — a root-level deny
-    ('/') blocks it everywhere (parse_url returns an empty path there,
-    which previously made the JVM side allow what the udf side denied)."""
+    ``robots_filter``, the python twin the crawl gate runs AND the
+    oracle — a root-level deny ('/') blocks it everywhere (parse_url
+    returns an empty path there, which previously made the JVM side
+    allow what the python side denied)."""
     from pyspark.sql import functions as F
 
     from parsel_spark.operators.frontier import robots_allowed_py, robots_filter
@@ -322,9 +323,9 @@ class TestWildcardPatterns:
             assert got is robots_pattern_matches(pattern, path)
 
     def test_wildcards_in_both_frontier_modes(self, spark) -> None:
-        """join mode (LIKE translation) and udf mode (regex twin) must
-        agree on wildcard/anchored rules, incl. the allow-wins
-        longest-match interplay."""
+        """``robots_filter`` (LIKE translation) and the crawl gate's
+        python twin (regex) must agree on wildcard/anchored rules, incl.
+        the allow-wins longest-match interplay."""
         from urllib.parse import urlsplit
 
         from pyspark.sql import functions as F
