@@ -14,8 +14,11 @@ Layers:
   oracle crawler used for exact-parity verification.
 """
 
+from ._runtime import install_zip_directory_guard
 from .selector import Selector, SelectorList, css2xpath, set_xpathfunc
 
 __version__ = "0.1.0"
+
+install_zip_directory_guard()
 
 __all__ = ["Selector", "SelectorList", "css2xpath", "set_xpathfunc", "__version__"]

@@ -82,7 +82,8 @@ class BloomShard:
 
     def content_hash(self) -> int:
         """Lineage fingerprint of the bitmap (snapshot per-partition
-        ``bloom_shard_hash``)."""
+        ``bloom_shard_hash``): the oracle's twin of the ``xxhash64``
+        column ``bloom_update`` computes in Spark."""
         return xxhash64(self.to_bytes())
 
 

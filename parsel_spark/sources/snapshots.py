@@ -4,7 +4,8 @@ this sandbox — SURVEY.md §7.0).
 Emulates the Iceberg commit model over plain Parquet:
 
 * immutable data files per snapshot under ``data/v{NNNN}/{table}/``;
-* a JSON metadata file per snapshot (``metadata/v{NNNN}.json``) holding
+* a JSON metadata file per snapshot (``metadata/v{NNNN}.json``,
+  written to a temp file and ``os.replace``d into place) holding
   snapshot_id, parent_id, wave, per-partition lineage (shard id, bloom
   shard hash, emitted/dequeued counters) and table→path mapping;
 * an atomically-replaced ``metadata/current`` pointer (write-temp +
@@ -19,10 +20,22 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+@contextmanager
+def _replacing(path: str):
+    """Write ``path`` through a temp file that replaces it only once the
+    write completed: a crash mid-write leaves the old file (or none),
+    never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        yield fh
+    os.replace(tmp, path)
 
 
 @dataclass
@@ -113,17 +126,12 @@ class SnapshotCatalog:
             metrics=metrics or {},
         )
         meta_path = os.path.join(self.metadata_dir, f"{version}.json")
-        with open(meta_path, "w") as fh:
+        with _replacing(meta_path) as fh:
             json.dump(snapshot.__dict__, fh, indent=1)
-        self._set_current(snapshot_id)
-        return snapshot
-
-    def _set_current(self, snapshot_id: int) -> None:
-        pointer = os.path.join(self.metadata_dir, "current")
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
+        # atomic commit point
+        with _replacing(os.path.join(self.metadata_dir, "current")) as fh:
             fh.write(str(snapshot_id))
-        os.replace(tmp, pointer)  # atomic commit point
+        return snapshot
 
     # -- read ------------------------------------------------------------
     def current_snapshot_id(self) -> int | None:

@@ -202,6 +202,81 @@ def test_initialize_metadata_write_failure_never_tears_snapshot(
         ) == (complete.wave, complete.lineage, complete.metrics), fail_at
 
 
+def test_torn_commit_metadata_leaves_parent_current(
+    spark, tmp_path, monkeypatch
+) -> None:
+    """``json.dump`` dies half-way through a commit's metadata: no torn
+    ``v####.json`` is left, the parent stays current, and a retried
+    commit takes the same id and loads cleanly."""
+    import glob
+    import json
+    import os
+
+    catalog = SnapshotCatalog(str(tmp_path))
+    table = spark.createDataFrame([(1,)], "id long")
+    parent = catalog.commit(wave=0, tables={"t": table})
+
+    def torn_dump(obj, fh, **kwargs):
+        text = json.dumps(obj, **kwargs)
+        fh.write(text[: len(text) // 2])
+        raise OSError("injected metadata write failure")
+
+    with monkeypatch.context() as patch:
+        patch.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="injected"):
+            catalog.commit(wave=1, tables={"t": table})
+
+    for path in glob.glob(os.path.join(str(tmp_path), "metadata", "v*.json")):
+        with open(path) as fh:
+            json.load(fh)  # a torn document raises here
+    assert catalog.load_snapshot().snapshot_id == parent.snapshot_id
+
+    retried = catalog.commit(wave=1, tables={"t": table})
+    assert retried.snapshot_id == parent.snapshot_id + 1
+    reloaded = SnapshotCatalog(str(tmp_path)).load_snapshot()
+    assert (reloaded.snapshot_id, reloaded.parent_id, reloaded.wave) == (
+        retried.snapshot_id,
+        parent.snapshot_id,
+        1,
+    )
+
+
+def test_lineage_keeps_one_row_per_shard(
+    spark, corpus, tmp_path, monkeypatch
+) -> None:
+    """The bloom lineage Observation sits below the write's exchange, so
+    a retried map task can report a shard twice: the snapshot's lineage
+    still holds one row per shard, equal to the oracle's."""
+    from pyspark.sql import Observation
+
+    from parsel_spark.plans import crawl as crawl_module
+
+    class RetriedObservation(Observation):
+        @property
+        def get(self):
+            got = super().get
+            if "rows" not in got:
+                return got
+            rows = list(got["rows"])
+            return {**got, "rows": rows + rows[:1]}
+
+    monkeypatch.setattr(crawl_module, "Observation", RetriedObservation)
+    pages, robots, seeds = corpus
+    catalog = SnapshotCatalog(str(tmp_path))
+    CrawlRun(spark, catalog, pages, robots, num_shards=SHARDS).initialize(seeds)
+
+    oracle = OracleCrawler(CFG, num_shards=SHARDS)
+    oracle.initialize(seed_rows(CFG, n_seeds=N_SEEDS))
+    assert catalog.load_snapshot().lineage == [
+        {
+            "partition_id": shard_id,
+            "bloom_shard_hash": shard.content_hash(),
+            "n_items": shard.n_items,
+        }
+        for shard_id, shard in sorted(oracle.state.bloom.items())
+    ]
+
+
 def test_odd_partitioning_exact_parity(
     spark, corpus, oracle_result, tmp_path
 ) -> None:
